@@ -417,7 +417,10 @@ class TilePyramid:
                     features_df.repartition(self._n_parts)
                     if pre_wrapped
                     else wrap_features(
-                        features_df.repartition(self._n_parts).localCheckpoint(),
+                        # lazy: wrap's deciding aggregate materializes it
+                        features_df.repartition(self._n_parts).localCheckpoint(
+                            eager=False
+                        ),
                         self.o.buffer / self.o.extent,
                         self.o.line_metrics,
                     )
@@ -504,44 +507,35 @@ class TilePyramid:
         z = 0
         while True:
             _pt0 = _time.time()
-            # full round-robin repartition, not coalesce: assignments are
-            # spatially skewed and coalesce would carry that skew into every
-            # downstream kernel task (straggler-bound wall time); the shuffle
-            # itself is cheap relative to the kernels it balances
+            if not (z == 0 and base_balanced):
+                # coalesce, not a round-robin repartition: since the split
+                # kernel only sees rows that genuinely need geometric
+                # clipping (clip_stage native routing), per-level Python
+                # work is too small to justify a full-payload shuffle per
+                # zoom — the single balancing shuffle lives in
+                # tile_features(), in front of the one remaining heavy
+                # Python pass (quantize). The coalesce only bounds the
+                # partition count (the native/kernel branch union doubles
+                # it every level). The z0 projection of an already
+                # balanced, materialized base needs neither.
+                assigned = assigned.coalesce(self._n_parts)
+                if self._io is None:
+                    # lazy checkpoint: the level materializes inside its
+                    # stats aggregate below (one fused pass,
+                    # ContextCleaner-managed blocks)
+                    assigned = assigned.localCheckpoint(eager=False)
             if self._io is not None:
                 # manifest-gated level checkpoint: a killed build resumes
                 # here — completed levels read back, this one re-runs
                 lvl_df = assigned  # bind before reassignment (closure)
                 res = self._io.run_stage(
                     f"pyr_level_{z:02d}",
-                    lambda: lvl_df.repartition(self._n_parts),
+                    lambda: lvl_df,
                     inputs=(self._prev_snap,),
                     fingerprint=self._fp,
                 )
                 assigned = res.df
                 self._prev_snap = res.snapshot_id
-            elif z == 0 and base_balanced:
-                # the z0 rows are a narrow projection of the already
-                # round-robin-balanced persisted base — a second
-                # full-payload shuffle + rematerialization buys nothing
-                pass
-            else:
-                # coalesce (not the round-robin repartition of earlier
-                # rounds): since the split kernel only sees rows that
-                # genuinely need geometric clipping (clip_stage native
-                # routing), per-level Python work is too small to justify a
-                # full-payload shuffle per zoom — the single balancing
-                # shuffle now lives in tile_features(), in front of the one
-                # remaining heavy Python pass (quantize). The coalesce only
-                # bounds the partition count (the native/kernel branch
-                # union doubles it every level). Lazy checkpoint: the
-                # level materializes inside its stats aggregate below (one
-                # fused pass, ContextCleaner-managed blocks); the
-                # workdir/TableIO branch above stays the
-                # reliable-checkpoint cluster path.
-                assigned = assigned.coalesce(self._n_parts).localCheckpoint(
-                    eager=False
-                )
             self._phase_log(f"z{z} split (lazy)", _pt0)
             _pt0 = _time.time()
             self._level_assigned[z] = assigned

@@ -6,10 +6,13 @@ pyiceberg exists in this environment (SURVEY.md §7 R4), so this implements
 the same semantics as a thin table layer:
 
 - each stage writes Parquet + a ``_manifest.json`` recording the stage name,
-  input snapshot ids (sha of upstream manifests), per-partition row counts,
+  input snapshot ids (sha of upstream manifests), per-file row counts,
   engine/options fingerprint, and a completion flag written LAST
   (write-then-rename, so a crash mid-write never yields a "complete"
-  manifest);
+  manifest). ``run_stage`` takes the per-file counts from the Parquet
+  footers of the files it just wrote, so a stage costs its write and no
+  read-back scan; ``compact`` recounts its rewrite with a scan, because
+  that count is the check that the rewrite kept every row;
 - ``run_stage`` skips execution when a complete manifest with matching
   inputs exists and just reads the table back — idempotent resume;
 - every rewrite of a stage creates a NEW versioned snapshot
@@ -35,6 +38,25 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def _footer_row_counts(files: list[str]) -> list[dict]:
+    """Per-file lineage counters read from the Parquet footers the writer
+    left (Iceberg-manifest style: counts from writer stats, not a rescan).
+    ``files`` are the URIs ``DataFrame.inputFiles()`` lists, which are the
+    strings ``input_file_name()`` reports; 0-row files are dropped, as a
+    scan would never report them."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    out = []
+    for f in sorted(files):
+        filesystem, fpath = pafs.FileSystem.from_uri(f)
+        rows = pq.read_metadata(fpath, filesystem=filesystem).num_rows
+        if rows:
+            out.append({"file": f, "rows": rows})
+    return out
 
 
 @dataclass
@@ -398,15 +420,16 @@ class TableIO:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
 
-        out = self.spark.read.parquet(path)
-        # per-partition lineage counters (file-level rows — Iceberg-manifest
-        # style; spark_partition_id is not stable across reads, file is)
-        per_file = [
-            {"file": r["file"], "rows": r["rows"]}
-            for r in out.groupBy(F.input_file_name().alias("file"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        ]
+        # read back with the written data schema: no footer schema-inference
+        # job. Partition columns are left out so they are still inferred
+        # from the directory names, with the same types a plain read gives.
+        out = self.spark.read.schema(
+            StructType([f for f in df.schema.fields if f.name not in partition_by])
+        ).parquet(path)
+        per_file = _footer_row_counts(out.inputFiles())
+        if partition_by and not per_file:
+            # no rows, so no partition directory to infer those columns from
+            out = self.spark.read.schema(df.schema).parquet(path)
         total = sum(p["rows"] for p in per_file)
         snapshot_id = hashlib.sha256(
             json.dumps(

@@ -22,11 +22,23 @@ import json
 import os
 
 REF_FIXTURES = "/root/reference/test/fixtures"
+VENDORED_FIXTURES = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
+)
 
 
 def load_fixture(name: str) -> str:
-    with open(os.path.join(REF_FIXTURES, name)) as f:
-        return f.read()
+    """A reference fixture by name, falling back to the copy vendored in the
+    repo's ``fixtures/`` when the reference checkout is absent. Raises
+    FileNotFoundError naming both paths when neither exists."""
+    paths = [os.path.join(d, name) for d in (REF_FIXTURES, VENDORED_FIXTURES)]
+    for path in paths:
+        if os.path.exists(path):
+            with open(path) as f:
+                return f.read()
+    raise FileNotFoundError(
+        f"fixture {name!r} not found: tried {paths[0]} and {paths[1]}"
+    )
 
 
 def load_golden_tiles(name: str) -> dict:

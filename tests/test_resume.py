@@ -34,6 +34,11 @@ def test_pipeline_checkpoints_and_resumes(spark, tmp_path):
     assert {k: v.snapshot_id for k, v in r2.items()} == {
         k: v.snapshot_id for k, v in r1.items()
     }
+    # a fresh run's read-back schema equals the schema-inferring resume
+    # read's, including tile_features' partition column z
+    assert {k: v.df.schema for k, v in r2.items()} == {
+        k: v.df.schema for k, v in r1.items()
+    }
 
     # options change invalidates the fingerprint -> full re-run
     r3 = checkpointed_pipeline(spark, wd, docs, Options(index_max_zoom=2, max_zoom=14))

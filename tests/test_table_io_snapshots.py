@@ -330,3 +330,124 @@ def test_interleaved_commit_does_not_regress_current(spark, tmp_path):
         fingerprint="fp-B",
     )
     assert rb.resumed and rb.rows == 25
+
+
+# ------------------------------------------------- manifests from footers
+
+
+def _rescan(spark, path):
+    from pyspark.sql import functions as F
+
+    return {
+        r["file"]: r["rows"]
+        for r in spark.read.parquet(path)
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(F.count("*").alias("rows"))
+        .collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "name,sql,partition_by",
+    [
+        ("nums", "SELECT id, id * 2 AS dbl FROM range(0, 40, 1, 4)", ()),
+        # a bigint source column: the read-back must still infer z as int
+        ("by_zoom", "SELECT id, id % 3 AS z FROM range(0, 40, 1, 4)", ("z",)),
+        ("two words", "SELECT id, id * 2 AS dbl FROM range(0, 40, 1, 4)", ()),
+        # 5 of 8 input partitions hold no row
+        ("sparse", "SELECT id FROM range(0, 40, 1, 8) WHERE id < 12", ()),
+        ("empty", "SELECT id FROM range(0, 40, 1, 4) WHERE id < 0", ()),
+    ],
+)
+def test_manifest_matches_rescan(spark, tmp_path, name, sql, partition_by):
+    """Footer-derived manifests equal what an ``input_file_name()`` rescan
+    of the written table reports — same files, same per-file rows, same
+    total — the snapshot id follows its documented scheme over them, and
+    the read-back schema equals a schema-inferring read's."""
+    import hashlib
+    import json
+    import os
+
+    io = TableIO(spark, str(tmp_path / "wd"))
+    r = io.run_stage(name, lambda: spark.sql(sql), inputs=("up",),
+                     fingerprint="fp", partition_by=partition_by)
+    m = io.read_manifest(name)
+    path = os.path.join(io.workdir, name, m["data_dir"])
+
+    scanned = _rescan(spark, path)
+    assert {p["file"]: p["rows"] for p in m["partitions"]} == scanned
+    assert len(m["partitions"]) == len(scanned)
+    assert m["total_rows"] == r.rows == sum(scanned.values())
+    assert m["snapshot_id"] == r.snapshot_id == hashlib.sha256(
+        json.dumps(
+            {"name": name, "inputs": ["up"], "fingerprint": "fp",
+             "files": sorted(scanned.items())},
+            sort_keys=True, default=str,
+        ).encode()
+    ).hexdigest()[:16]
+    assert r.df.schema == spark.read.parquet(path).schema
+    assert r.df.count() == r.rows
+
+
+def test_run_stage_runs_no_job_beyond_its_write(spark, tmp_path):
+    """On an already-materialized DataFrame, run_stage costs exactly the
+    jobs of a plain parquet write of it: counts come from footers and the
+    read-back needs no schema inference."""
+    from .conftest import count_jobs
+
+    df = spark.range(0, 400, 1, 4).selectExpr("id", "id * 2 AS dbl").localCheckpoint()
+    with count_jobs(spark) as write_only:
+        df.write.mode("append").parquet(str(tmp_path / "plain"))
+    io = TableIO(spark, str(tmp_path / "wd"))
+    with count_jobs(spark) as staged:
+        r = io.run_stage("nums", lambda: df, fingerprint="fp")
+    assert r.rows == 400
+    assert write_only["jobs"] >= 1
+    assert staged["jobs"] == write_only["jobs"]
+
+
+def test_empty_partitioned_stage_keeps_its_columns(spark, tmp_path):
+    """A partitioned stage with no rows writes no partition directory; its
+    read-back still carries the partition column."""
+    io = TableIO(spark, str(tmp_path / "wd"))
+    r = io.run_stage(
+        "empty_by_zoom",
+        lambda: spark.sql("SELECT id, id % 3 AS z FROM range(0, 40, 1, 4) WHERE id < 0"),
+        fingerprint="fp",
+        partition_by=("z",),
+    )
+    assert r.rows == 0 and io.read_manifest("empty_by_zoom")["partitions"] == []
+    assert r.df.columns == ["id", "z"] and r.df.count() == 0
+
+
+def test_durable_pyramid_manifests_match_rescan(spark, tmp_path):
+    """Every stage of a ``TilePyramid(workdir=)`` build records the files and
+    per-file rows a rescan of its table reports, and each level the BFS
+    reads back has the schema a schema-inferring read gives."""
+    import os
+
+    from geojson_vt_cpp_spark.config import Options
+    from geojson_vt_cpp_spark.operators.convert import extract_features
+    from geojson_vt_cpp_spark.operators.pyramid import TilePyramid
+    from geojson_vt_cpp_spark.sources.documents import documents_from_fixture
+
+    from .golden_utils import load_fixture
+
+    opts = Options(index_max_zoom=2, index_max_points=2000, max_zoom=14)
+    docs = documents_from_fixture(spark, load_fixture("us-states.json"), "us-states")
+    tol = (opts.tolerance / opts.extent) / (1 << opts.max_zoom)
+    wd = str(tmp_path / "wd")
+    pyr = TilePyramid(extract_features(docs, tol), opts, workdir=wd)
+    io = TableIO(spark, wd)
+    stages = ["pyr_base"] + [f"pyr_level_{z:02d}" for z in sorted(pyr._level_assigned)]
+    for name in stages:
+        m = io.read_manifest(name)
+        path = os.path.join(wd, name, m["data_dir"])
+        scanned = _rescan(spark, path)
+        assert {p["file"]: p["rows"] for p in m["partitions"]} == scanned, name
+        assert m["total_rows"] == sum(scanned.values()) > 0, name
+    for z, df in pyr._level_assigned.items():
+        m = io.read_manifest(f"pyr_level_{z:02d}")
+        path = os.path.join(wd, f"pyr_level_{z:02d}", m["data_dir"])
+        assert df.schema == spark.read.parquet(path).schema, z
+    pyr.close()
